@@ -38,6 +38,7 @@ entirely from the operators those sections define.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
 
@@ -677,7 +678,415 @@ def curate_frame(
         raise
 
 
-class CorpusWriter:
+# Stamped on a derived layer's collapse tombstone when reconcile
+# rebuilds it: without it a rebuild's cleared manifest is
+# indistinguishable from true late alignment.
+_REBUILD_REASON = (
+    "layer history collapsed by reconcile (full rebuild from the data of "
+    "record)"
+)
+
+
+class _GenerationPinnedWriter:
+    """What :class:`CorpusWriter` and :class:`EmbeddingWriter` share: a
+    data-of-record dir whose admissions are generation-pinned
+    (`incremental.record_snapshot`), an index dir of derived layers
+    pinned in lockstep with it, and the single-writer lease over both.
+
+    A subclass declares:
+
+    - ``_RECORD``: the data of record's name, ``"corpus"`` or
+      ``"store"``. Its dir is the ``{_RECORD}_dir`` attribute, and the
+      name keys it in :meth:`prune_snapshots` / :meth:`vacuum` results;
+    - ``_RECORD_KEY``: the sort key of its compaction/vacuum rewrites;
+    - ``_ID_PREFIX``: the writer-id prefix stamped into the lease;
+    - ``_LAYERS``: every derived layer that carries a generation
+      manifest, one ``(dir relative to index_dir, vacuum sort key,
+      partition_by)`` row each, in vacuum order. Prune and vacuum walk
+      exactly the data of record plus this table; a layer's result key
+      is its dir's basename;
+    - ``_DRIFT_LAYER``: the drift-histogram layer's dir name, with the
+      three hooks its shared body calls — ``_drift_recount()`` (the
+      layer's (b, c) histogram recounted from the data of record),
+      ``_drift_hist_of(frame)`` (a batch's histogram) and
+      ``_drift_domain()`` (the bucket count both range over)."""
+
+    _RECORD = ""
+    _RECORD_KEY: tuple[str, ...] = ()
+    _ID_PREFIX = ""
+    _LAYERS: tuple[tuple[str, tuple[str, ...], tuple[str, ...]], ...] = ()
+    _DRIFT_LAYER = ""
+
+    def __init__(self, spark: SparkSession, index_dir: str) -> None:
+        import os
+        import uuid
+
+        self.spark = spark
+        self.index_dir = index_dir
+        self._writer_id = "{}-{}-{}".format(
+            self._ID_PREFIX, os.getpid(), uuid.uuid4().hex[:12]
+        )
+        self._lease_gen = 0  # set by every _leased() entry
+        self._lease_held = False
+
+    @property
+    def _record_dir(self) -> str:
+        return getattr(self, f"{self._RECORD}_dir")
+
+    def _fence(self) -> tuple[str, str, int]:
+        """(lease_dir, writer_id, gen) — the fencing token stamped into
+        staged-swap commits and verified before irreversible appends
+        (`incremental.verify_lease`): a writer resumed after a TTL
+        takeover fails loudly instead of interleaving (VERDICT r11 #5)."""
+        return (self.index_dir, self._writer_id, self._lease_gen)
+
+    @contextmanager
+    def _leased(self):
+        """Run the body under the index's single-writer lease
+        (`incremental.acquire_lease` — VERDICT r10 #6). A second
+        concurrent writer fails loudly with `incremental.LeaseHeld`
+        instead of interleaving crash markers; a crashed holder's lease
+        is taken over after `incremental.LEASE_TTL_S`; the lease is
+        released on every exit, raising or not. Every public mutating
+        entry of the writer family runs through here.
+
+        Nesting raises ``RuntimeError`` before touching the lease: the
+        inner exit's release would drop the outer lease mid-body (the
+        r11 rule), so lease-held code calls the unlocked ``_*_locked``
+        bodies instead."""
+        from . import incremental
+
+        if self._lease_held:
+            raise RuntimeError(
+                f"{type(self).__name__}: nested _leased() — this writer "
+                "already holds the lease; call the unlocked _*_locked "
+                "body instead"
+            )
+        self._lease_gen = incremental.acquire_lease(
+            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
+        )
+        self._lease_held = True
+        try:
+            yield
+        finally:
+            self._lease_held = False
+            incremental.release_lease(self.index_dir, self._writer_id)
+
+    def _read_record(self, as_of: int | None) -> DataFrame:
+        from . import incremental
+
+        incremental.recover_data_dir(self._record_dir)
+        if as_of is None:
+            return self.spark.read.parquet(self._record_dir)
+        files = incremental.snapshot_files(self._record_dir, as_of)
+        # Explicit many-path LOCAL reads skip the distributed listing
+        # job (r18 — the snapshot_read discipline; schema inference
+        # stays, this is a schema-evolvable data-of-record dir).
+        with incremental._local_listing_scope(self.spark, files):
+            return self.spark.read.parquet(*files)
+
+    def snapshots(self) -> int:
+        """Recorded admission-snapshot generations of the data of
+        record (0 for a corpus or store written before snapshots
+        existed) — valid ``as_of`` values are 1..this."""
+        from . import incremental
+
+        return incremental.snapshot_gens(self._record_dir)
+
+    def _compact_record(self) -> dict:
+        from . import incremental
+
+        with self._leased():
+            return incremental.compact_data_snapshots(
+                self.spark,
+                self._record_dir,
+                self._RECORD_KEY,
+                fence=self._fence(),
+            )
+
+    def _export_record(self, as_of: int, dest_dir: str) -> dict:
+        from . import incremental
+
+        with self._leased():
+            return incremental.export_snapshot(
+                self._record_dir, as_of, dest_dir
+            )
+
+    def reconcile(self) -> dict:
+        """Public entry: :meth:`_reconcile_locked` under the
+        single-writer lease (the :meth:`admit` contract)."""
+        with self._leased():
+            return self._reconcile_locked()
+
+    def compact(self) -> dict:
+        """Public entry: :meth:`_compact_locked` under the
+        single-writer lease (the :meth:`admit` contract)."""
+        with self._leased():
+            return self._compact_locked()
+
+    def _servable_layers(self, before_gen: int):
+        """(basename, dir, sort key, partition_by) of each ``_LAYERS``
+        dir that exists with a manifest reaching ``before_gen`` — read
+        lazily, just before the caller handles that layer."""
+        import os
+
+        from . import incremental
+
+        for rel, order, parts in self._LAYERS:
+            d = f"{self.index_dir}/{rel}"
+            if os.path.isdir(d) and incremental.snapshot_gens(d) >= before_gen:
+                yield os.path.basename(d), d, order, parts
+
+    def prune_snapshots(self, before_gen: int) -> dict:
+        """Manifest retention across the whole writer family (VERDICT
+        r13 #3): collapse generations ``< before_gen`` on the data of
+        record AND every derived layer together, so lockstep numbering
+        survives — ``corpus(as_of>=before_gen)`` /
+        ``store(as_of>=before_gen)`` and every from-index
+        ``as_of>=before_gen`` read are bit-equal before/after, older
+        pins fail loudly naming the horizon. Driver-side manifest
+        rewrites only (each atomic; a crash between dirs is healed by
+        re-running — prune is idempotent), under the writer lease with
+        the fencing check. Layers whose manifests lag the horizon (a
+        crash inside a previous admit's recording window) are skipped —
+        the next admit's `record_aligned_snapshot` collapses them
+        anyway. Composes with ``compact_corpus`` / ``compact_store`` in
+        either order (pinned). Returns {dir_basename: changed} per
+        touched dir, the data of record under ``"corpus"`` /
+        ``"store"``."""
+        with self._leased():
+            return self._prune_snapshots_locked(before_gen)
+
+    def _prune_snapshots_locked(self, before_gen: int) -> dict:
+        """Family-wide prune body, callable from other LEASE-HELD entry
+        points (:meth:`vacuum`) — the r11 rule: internal calls route to
+        unlocked bodies."""
+        from . import incremental
+
+        incremental.verify_lease(*self._fence())
+        incremental.recover_data_dir(self._record_dir, locked=True)
+        out = {
+            self._RECORD: incremental.prune_snapshots(
+                self._record_dir, before_gen
+            )
+        }
+        for name, d, _, _ in self._servable_layers(before_gen):
+            out[name] = incremental.prune_snapshots(d, before_gen)
+        return out
+
+    def vacuum(self, before_gen: int) -> dict:
+        """Byte reclamation below the retention horizon (VERDICT r14
+        #1), family-wide under the writer lease: prune every manifest
+        to ``before_gen`` (idempotent), then physically rewrite the
+        data of record's merged base generation — its per-admit small
+        files collapse to ``⌈bytes/256 MB⌉`` doc_id- / vec_id-sorted
+        files, the superseded pre-horizon files are dropped at the
+        staged swap — and every derived layer the same way, each sorted
+        by its query key so point scans stay parquet-min/max-pruned:
+
+        - text writer: the dedup index's ``digests``; its ``bands``,
+          with physical deletion of tombstone-masked rows on top of the
+          consolidation (see ``CorpusWriter._vacuum_layer``); the BM25
+          postings/df/doclen (term-pushdown key); the paragraph and
+          exact-substr digest layers (digest key — the pre-stage
+          anti-joins); the drift reference histogram (bucket key); and
+          the ``dropped`` tombstones, every row of which is kept;
+        - vector writer: the inverted file by cell, occupancy by
+          (table, bucket), the codes by their scan key, the cell
+          histogram by bucket; the hive-partitioned ``lsh_signatures``
+          rewrite re-emits its ``table_id=`` dirs (``partition_by`` —
+          the manifest keeps partition-dir-relative names, so
+          ``basePath`` as-of readers still recover the column).
+
+        Apart from ``bands`` no layer has masked rows, so those vacuums
+        are consolidation-only (``dead=None``). Post-horizon as-of
+        history survives — unlike :meth:`compact`, which collapses it.
+        ``corpus`` / ``store(as_of >= before_gen)`` and every from-index
+        ``as_of >= before_gen`` read are bit-equal before/after, older
+        pins stay loudly refused, a crash anywhere self-heals at the
+        next read (`recover_data_dir`), and later admits keep appending
+        generations. Returns per-dir byte/file/row accounting."""
+        with self._leased():
+            out: dict = self._prune_snapshots_locked(before_gen)
+            out[self._RECORD] = self._vacuum_layer(
+                self._RECORD, self._record_dir, before_gen,
+                self._RECORD_KEY, (),
+            )
+            for name, d, order, parts in self._servable_layers(before_gen):
+                out[name] = self._vacuum_layer(
+                    name, d, before_gen, order, parts
+                )
+            return out
+
+    def _vacuum_layer(
+        self,
+        name: str,
+        d: str,
+        before_gen: int,
+        order: tuple[str, ...],
+        parts: tuple[str, ...],
+    ) -> dict:
+        """Vacuum one generation-pinned dir (lease held),
+        consolidation-only. The hook a writer overrides for a
+        layer-specific step."""
+        from . import incremental
+
+        return incremental.vacuum_data_snapshots(
+            self.spark,
+            d,
+            before_gen,
+            order,
+            fence=self._fence(),
+            partition_by=parts,
+        )
+
+    # --- the drift-histogram layer (drift_ref / cell_hist) -------------
+
+    def _drift_dir(self) -> str:
+        return f"{self.index_dir}/{self._DRIFT_LAYER}"
+
+    def _drift_marker(self) -> str:
+        return f"{self._drift_dir()}.inprogress"
+
+    def _drift_domain_pinned(self) -> bool:
+        """Whether the stored layer is in this writer's bucket domain;
+        a False forces the heal rebuild. Writers whose domain cannot
+        drift from the stored layer keep the default."""
+        return True
+
+    def _pin_drift_domain(self) -> None:
+        """Record the bucket domain a rebuild wrote, for
+        :meth:`_drift_domain_pinned` to check."""
+
+    def _rebuild_drift(
+        self, gen: int | None = None, reason: str | None = None
+    ) -> None:
+        """Overwrite the layer with the recount of the data of record
+        (one segment) and drop any crash marker the rebuild supersedes.
+        ``gen``: align the fresh manifest with that data-of-record
+        generation (``reason`` stamped on the collapse line)."""
+        import os
+
+        from . import incremental
+
+        self._drift_recount().write.mode("overwrite").parquet(
+            self._drift_dir()
+        )
+        self._pin_drift_domain()
+        if os.path.exists(self._drift_marker()):
+            os.remove(self._drift_marker())
+        if gen is not None:
+            incremental.record_aligned_snapshot(
+                self._drift_dir(), gen, reason=reason
+            )
+
+    def _drift_hist_or_heal(self) -> DataFrame:
+        """The stored reference histogram (per-segment (b, c) rows; the
+        reader sums segments). Self-heals like the other derived
+        layers: an interrupted compact swap forward-rolls, and a
+        missing / uncommitted / marker-bracketed / out-of-domain layer
+        (data admitted before ``drift_monitor=True``, or a crash inside
+        the derived-layer append window) is rebuilt from the data of
+        record — which at every call site is exactly the pre-admit
+        state the layer must describe (the extend runs later)."""
+        import os
+
+        from . import incremental
+
+        incremental._recover_staged(
+            self.index_dir, (self._DRIFT_LAYER,), discard_stage=False
+        )
+        if (
+            os.path.exists(self._drift_marker())
+            or not _parquet_dir_committed(self._drift_dir())
+            or not self._drift_domain_pinned()
+        ):
+            self._rebuild_drift()
+        return self.spark.read.parquet(self._drift_dir())
+
+    def _extend_drift(self, novel: DataFrame) -> None:
+        """Append the admitted batch's histogram segment, bracketed by
+        a marker: a crash mid-append leaves the marker, and the next
+        reader rebuilds the whole layer from the (already-committed)
+        data of record instead of double-counting a half-written
+        segment."""
+        import os
+
+        open(self._drift_marker(), "w").close()
+        self._drift_hist_of(novel).write.mode("append").parquet(
+            self._drift_dir()
+        )
+        os.remove(self._drift_marker())
+
+    def _measure_drift(self, batch: DataFrame, as_of: int | None) -> dict:
+        """The body of ``drift_stats``: exact fixed-point KL/TV of
+        ``batch``'s histogram vs the stored layer, read through the
+        heal path, or at generation ``as_of`` (r14: the layer carries
+        per-admit manifests; collapsed or pruned generations fail
+        loudly)."""
+        from . import incremental
+        from .queries.text import DRIFT_HIST_SCHEMA, corpus_drift_from_hists
+
+        if not self.drift_monitor:
+            raise ValueError(
+                f"this {type(self).__name__} was constructed without "
+                "drift_monitor=True — there is no stored drift-histogram "
+                "layer to measure against"
+            )
+        if as_of is None:
+            ref = self._drift_hist_or_heal()
+        else:
+            incremental._recover_staged(
+                self.index_dir, (self._DRIFT_LAYER,), discard_stage=False
+            )
+            ref = incremental.snapshot_read(
+                self.spark, self._drift_dir(), as_of,
+                schema=DRIFT_HIST_SCHEMA,
+            )
+        row = corpus_drift_from_hists(
+            self.spark,
+            ref,
+            self._drift_hist_of(batch),
+            self._drift_domain(),
+        ).collect()[0]
+        return {
+            "drift_kl_fix": int(row["kl_fix"]),
+            "drift_tv_fix": int(row["tv_fix"]),
+        }
+
+    def _compact_drift(self) -> None:
+        """Collapse the layer's per-admit segments to ≤ one row per
+        bucket (lease held) — counts are additive, so the summed
+        rewrite is content-equivalent under the reader's own SUM
+        (pinned)."""
+        import os
+
+        if not (self.drift_monitor and os.path.isdir(self._drift_dir())):
+            return
+        self.spark.read.parquet(self._drift_dir()).groupBy("b").agg(
+            F.sum("c").cast("long").alias("c")
+        ).coalesce(1).write.mode("overwrite").parquet(
+            f"{self._drift_dir()}.compact"
+        )
+        self._swap_in_collapsed(self._DRIFT_LAYER)
+
+    def _swap_in_collapsed(self, name: str) -> None:
+        """Commit layer ``name``'s staged ``.compact`` rewrite (lease
+        held). Generation-pinned layer (r14): the manifest collapses
+        INTO the stage first, so files + manifest swap together and
+        older as_of pins then fail loudly (the VERDICT r13 rewrite
+        contract)."""
+        from . import incremental
+
+        gens = incremental.snapshot_gens(f"{self.index_dir}/{name}")
+        if gens:
+            incremental.collapse_snapshots(
+                f"{self.index_dir}/{name}.compact", gens
+            )
+        incremental._swap_staged(self.index_dir, name, fence=self._fence())
+
+
+class CorpusWriter(_GenerationPinnedWriter):
     """Batch-at-a-time corpus admission: the incremental form of
     :func:`curate_frame` for a corpus that GROWS (stream ingestion, daily
     crawl drops) instead of being rebuilt.
@@ -702,6 +1111,32 @@ class CorpusWriter:
     union may elect a different component representative). Exactness of
     the EXACT-dup layer is order-independent.
     """
+
+    _RECORD = "corpus"
+    _RECORD_KEY = ("doc_id",)
+    _ID_PREFIX = "cw"
+    _LAYERS = (
+        ("digests", ("doc_id",), ()),
+        ("bands", ("band_id", "band_key"), ()),
+        ("bm25/postings", ("term", "doc_id"), ()),
+        ("bm25/df", ("term",), ()),
+        ("bm25/doclen", ("doc_id",), ()),
+        ("paragraphs", ("h",), ()),
+        ("exact_substr", ("h",), ()),
+        ("drift_ref", ("b",), ()),
+        # Tombstones (VERDICT r15 #5): the ROWS are load-bearing
+        # forever — a bucket the cap rule ever dropped must stay
+        # masked, or post-vacuum appends to it would pair against a
+        # remnant whose earlier members are physically gone (the r10
+        # cap contract; a full union rebuild drops the bucket too). Row
+        # growth is bounded and tiny: ≤ total-band-rows-ever /
+        # MAX_BUCKET rows of two ids (SCALING.md). The per-admit small
+        # FILES, however, are pure layout overhead — consolidation-only
+        # vacuum, AFTER ``bands`` (whose dead-row step reads this
+        # layer).
+        ("dropped", ("band_id", "band_key"), ()),
+    )
+    _DRIFT_LAYER = "drift_ref"
 
     def __init__(
         self,
@@ -757,9 +1192,8 @@ class CorpusWriter:
         reference corpus is never re-scanned (the guardrail VERDICT
         r10 #2 flagged as an op you had to remember to run). Off by
         default: +2 jobs per admit."""
-        self.spark = spark
+        super().__init__(spark, index_dir)
         self.corpus_dir = corpus_dir
-        self.index_dir = index_dir
         self.config = config or CurationConfig()
         self.benchmark_doc = benchmark_doc
         self.decontam_max_frac = decontam_max_frac
@@ -779,23 +1213,9 @@ class CorpusWriter:
         self.drift_warn = drift_warn
         self.drift_refuse = drift_refuse
         self._bench_shingles: DataFrame | None = None
-        import os as _os
-        import uuid as _uuid
-
-        self._writer_id = "cw-{}-{}".format(
-            _os.getpid(), _uuid.uuid4().hex[:12]
-        )
-        self._lease_gen = 0  # set by every public mutating entry
 
     def _bootstrapped(self) -> bool:
         return _readable_meta(self.index_dir)
-
-    def _fence(self) -> tuple[str, str, int]:
-        """(lease_dir, writer_id, gen) — the fencing token stamped into
-        staged-swap commits and verified before irreversible appends
-        (`incremental.verify_lease`): a writer resumed after a TTL
-        takeover fails loudly instead of interleaving (VERDICT r11 #5)."""
-        return (self.index_dir, self._writer_id, self._lease_gen)
 
     def _corpus_exists(self) -> bool:
         return _parquet_dir_committed(self.corpus_dir)
@@ -807,25 +1227,7 @@ class CorpusWriter:
         the files the first ``as_of`` recorded admissions committed
         (`incremental.snapshot_files`, zero jobs): reproducible
         training snapshots, and isolation from an in-flight admit."""
-        from . import incremental
-
-        incremental.recover_data_dir(self.corpus_dir)
-        if as_of is None:
-            return self.spark.read.parquet(self.corpus_dir)
-        files = incremental.snapshot_files(self.corpus_dir, as_of)
-        # Explicit many-path LOCAL reads skip the distributed listing
-        # job (r18 — the snapshot_read discipline; schema inference
-        # stays, this is a schema-evolvable data-of-record dir).
-        with incremental._local_listing_scope(self.spark, files):
-            return self.spark.read.parquet(*files)
-
-    def snapshots(self) -> int:
-        """Recorded admission-snapshot generations (0 for a corpus
-        written before snapshots existed) — valid ``as_of`` values are
-        1..this."""
-        from . import incremental
-
-        return incremental.snapshot_gens(self.corpus_dir)
+        return self._read_record(as_of)
 
     def compact_corpus(self) -> dict:
         """Snapshot-AWARE compaction of the data of record (VERDICT r12
@@ -837,229 +1239,70 @@ class CorpusWriter:
         trade history for layout). Staged-swap crash discipline
         (`incremental.recover_data_dir` heals an interrupted commit at
         every read), under the writer lease."""
-        from . import incremental
+        return self._compact_record()
 
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.compact_data_snapshots(
-                self.spark,
-                self.corpus_dir,
-                ("doc_id",),
-                fence=self._fence(),
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _pruneable_layer_dirs(self) -> list[str]:
-        import os
-
-        names = [
-            "digests",
-            "bands",
-            "dropped",
-            "paragraphs",
-            "exact_substr",
-            "drift_ref",
-        ]
-        dirs = [f"{self.index_dir}/{n}" for n in names]
-        dirs += [
-            f"{self._bm25_dir()}/{n}" for n in ("postings", "df", "doclen")
-        ]
-        return [d for d in dirs if os.path.isdir(d)]
-
-    def prune_snapshots(self, before_gen: int) -> dict:
-        """Manifest retention across the whole writer family (VERDICT
-        r13 #3): collapse generations ``< before_gen`` on the data of
-        record AND every derived layer together, so lockstep numbering
-        survives — ``corpus(as_of>=before_gen)`` and every from-index
-        ``as_of>=before_gen`` read are bit-equal before/after, older
-        pins fail loudly naming the horizon. Driver-side manifest
-        rewrites only (each atomic; a crash between dirs is healed by
-        re-running — prune is idempotent), under the writer lease with
-        the fencing check. Layers whose manifests lag the horizon (a
-        crash inside a previous admit's recording window) are skipped —
-        the next admit's `record_aligned_snapshot` collapses them
-        anyway. Composes with :meth:`compact_corpus` in either order
-        (pinned). Returns {dir_basename: changed} per touched dir."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._prune_snapshots_locked(before_gen)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _prune_snapshots_locked(self, before_gen: int) -> dict:
-        """Family-wide prune body, callable from other LEASE-HELD entry
-        points (:meth:`vacuum`) — the r11 rule: internal calls route to
-        unlocked bodies or the inner release drops the outer lease."""
-        import os
-
-        from . import incremental
-
-        incremental.verify_lease(*self._fence())
-        incremental.recover_data_dir(self.corpus_dir, locked=True)
-        out = {
-            "corpus": incremental.prune_snapshots(
-                self.corpus_dir, before_gen
-            )
-        }
-        for d in self._pruneable_layer_dirs():
-            if incremental.snapshot_gens(d) >= before_gen:
-                out[os.path.basename(d)] = incremental.prune_snapshots(
-                    d, before_gen
-                )
-        return out
-
-    def vacuum(self, before_gen: int) -> dict:
-        """Byte reclamation below the retention horizon (VERDICT r14
-        #1), family-wide under the writer lease: prune every manifest
-        to ``before_gen`` (idempotent), then physically rewrite
-
-        - the CORPUS data of record — the merged base generation's
-          per-admit small files collapse to ``⌈bytes/256 MB⌉``
-          doc_id-sorted files, the superseded pre-horizon files are
-          dropped at the staged swap;
-        - the dedup index's ``digests`` layer — same consolidation;
-        - the dedup index's ``bands`` layer — consolidation PLUS
-          physical deletion of band rows whose bucket a generation
-          ``<= before_gen`` tombstone masks: every ``as_of >=
-          before_gen`` serve anti-joins those rows away
-          (`dedup_against_index`), so dropping them is serve-invisible
-          (pinned); the drift baseline in ``meta.json`` shrinks by the
-          same count (conservative — drift can only warn sooner).
-
-        Every other FLAT per-admit layer is consolidated too (no
-        masked rows there — ``dead=None``), sorted by its query key so
-        point scans stay parquet-min/max-pruned: the BM25
-        postings/df/doclen (term-pushdown key), the paragraph and
-        exact-substr digest layers (digest key — the pre-stage
-        anti-joins), and the drift reference histogram (bucket key).
-        Their post-horizon as-of history survives — unlike
-        :meth:`compact`, which collapses it.
-
-        ``corpus(as_of >= before_gen)`` is bit-equal before/after,
-        older pins stay loudly refused, a crash anywhere self-heals at
-        the next read (`recover_data_dir`), and later admits keep
-        appending generations. Returns per-dir byte/file/row
-        accounting."""
+    def _vacuum_layer(
+        self,
+        name: str,
+        d: str,
+        before_gen: int,
+        order: tuple[str, ...],
+        parts: tuple[str, ...],
+    ) -> dict:
+        """:meth:`vacuum`'s one text-specific step, on the dedup
+        index's ``bands`` layer: consolidation PLUS physical deletion
+        of band rows whose bucket a generation ``<= before_gen``
+        tombstone masks. Every ``as_of >= before_gen`` serve anti-joins
+        those rows away (`dedup_against_index`), so dropping them is
+        serve-invisible (pinned); the drift baseline
+        ``base_band_rows`` in ``meta.json`` shrinks by the same count
+        (conservative — drift can only warn sooner)."""
         import json
         import os
 
         from . import incremental
 
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            out: dict = self._prune_snapshots_locked(before_gen)
-            out["corpus"] = incremental.vacuum_data_snapshots(
-                self.spark,
-                self.corpus_dir,
-                before_gen,
-                ("doc_id",),
-                fence=self._fence(),
+        if name != "bands":
+            return super()._vacuum_layer(name, d, before_gen, order, parts)
+        # Dead rows: buckets tombstoned at or below the horizon mask
+        # their stored rows for EVERY servable as_of. Only a
+        # horizon-resolvable tombstone manifest can prove membership —
+        # a lagging one downgrades to consolidation-only (dead=None),
+        # never guesses.
+        dead = None
+        drop_dir = f"{self.index_dir}/dropped"
+        if (
+            os.path.isdir(drop_dir)
+            and incremental.snapshot_gens(drop_dir) >= before_gen
+        ):
+            dead = incremental._read_dropped(
+                self.spark, self.index_dir, as_of=before_gen
             )
-            dig = f"{self.index_dir}/digests"
-            if (
-                os.path.isdir(dig)
-                and incremental.snapshot_gens(dig) >= before_gen
-            ):
-                out["digests"] = incremental.vacuum_data_snapshots(
-                    self.spark,
-                    dig,
-                    before_gen,
-                    ("doc_id",),
-                    fence=self._fence(),
-                )
-            bands = f"{self.index_dir}/bands"
-            if (
-                os.path.isdir(bands)
-                and incremental.snapshot_gens(bands) >= before_gen
-            ):
-                # Dead rows: buckets tombstoned at or below the horizon
-                # mask their stored rows for EVERY servable as_of. Only
-                # a horizon-resolvable tombstone manifest can prove
-                # membership — a lagging one downgrades to
-                # consolidation-only (dead=None), never guesses.
-                dead = None
-                drop_dir = f"{self.index_dir}/dropped"
-                if (
-                    os.path.isdir(drop_dir)
-                    and incremental.snapshot_gens(drop_dir) >= before_gen
-                ):
-                    dead = incremental._read_dropped(
-                        self.spark, self.index_dir, as_of=before_gen
-                    )
-                out["bands"] = incremental.vacuum_data_snapshots(
-                    self.spark,
-                    bands,
-                    before_gen,
-                    ("band_id", "band_key"),
-                    dead=dead,
-                    fence=self._fence(),
-                )
-                removed = out["bands"]["rows_dropped"]
-                # Crash window (ADVICE r15): this meta rewrite is NOT
-                # atomic with the bands staged swap above. A crash
-                # in between leaves `base_band_rows` inflated by
-                # `removed`, so the band-growth compaction trigger
-                # fires LATER than intended (ratio reads low) — never
-                # earlier, never wrong data. The next `compact` heals
-                # it exactly: `compact_index` recomputes the baseline
-                # from the rewritten bands dir (`_dir_rows`).
-                # Recomputing here instead would fold post-compaction
-                # appends into the baseline and RESET growth
-                # accounting, which is worse than the window.
-                if removed:
-                    meta_path = f"{self.index_dir}/meta.json"
-                    with open(meta_path) as fh:
-                        meta = json.load(fh)
-                    base = meta.get("base_band_rows")
-                    if base is not None:
-                        meta["base_band_rows"] = max(0, base - removed)
-                        tmp = meta_path + ".tmp"
-                        with open(tmp, "w") as fh:
-                            json.dump(meta, fh)
-                        os.replace(tmp, meta_path)
-            for d, order in (
-                (f"{self._bm25_dir()}/postings", ("term", "doc_id")),
-                (f"{self._bm25_dir()}/df", ("term",)),
-                (f"{self._bm25_dir()}/doclen", ("doc_id",)),
-                (self._paras_dir(), ("h",)),
-                (self._substr_dir(), ("h",)),
-                (self._drift_dir(), ("b",)),
-                # Tombstones (VERDICT r15 #5): the ROWS are load-bearing
-                # forever — a bucket the cap rule ever dropped must stay
-                # masked, or post-vacuum appends to it would pair
-                # against a remnant whose earlier members are physically
-                # gone (the r10 cap contract; a full union rebuild drops
-                # the bucket too). Row growth is bounded and tiny:
-                # ≤ total-band-rows-ever / MAX_BUCKET rows of two ids
-                # (SCALING.md). The per-admit small FILES, however, are
-                # pure layout overhead — consolidation-only vacuum.
-                (f"{self.index_dir}/dropped", ("band_id", "band_key")),
-            ):
-                if (
-                    os.path.isdir(d)
-                    and incremental.snapshot_gens(d) >= before_gen
-                ):
-                    out[os.path.basename(d)] = (
-                        incremental.vacuum_data_snapshots(
-                            self.spark,
-                            d,
-                            before_gen,
-                            order,
-                            fence=self._fence(),
-                        )
-                    )
-            return out
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        out = incremental.vacuum_data_snapshots(
+            self.spark, d, before_gen, order, dead=dead, fence=self._fence()
+        )
+        removed = out["rows_dropped"]
+        # Crash window (ADVICE r15): this meta rewrite is NOT atomic
+        # with the bands staged swap above. A crash in between leaves
+        # `base_band_rows` inflated by `removed`, so the band-growth
+        # compaction trigger fires LATER than intended (ratio reads
+        # low) — never earlier, never wrong data. The next `compact`
+        # heals it exactly: `compact_index` recomputes the baseline
+        # from the rewritten bands dir (`_dir_rows`). Recomputing here
+        # instead would fold post-compaction appends into the baseline
+        # and RESET growth accounting, which is worse than the window.
+        if removed:
+            meta_path = f"{self.index_dir}/meta.json"
+            with open(meta_path) as fh:
+                meta = json.load(fh)
+            base = meta.get("base_band_rows")
+            if base is not None:
+                meta["base_band_rows"] = max(0, base - removed)
+                tmp = meta_path + ".tmp"
+                with open(tmp, "w") as fh:
+                    json.dump(meta, fh)
+                os.replace(tmp, meta_path)
+        return out
 
     def export_corpus(self, as_of: int, dest_dir: str) -> dict:
         """Publish the corpus as of generation ``as_of`` as a
@@ -1067,17 +1310,7 @@ class CorpusWriter:
         writer lease so a concurrent vacuum cannot delete files
         mid-copy. The export is bit-equal to ``corpus(as_of)`` and
         independent of this family's later maintenance (pinned)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.export_snapshot(
-                self.corpus_dir, as_of, dest_dir
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._export_record(as_of, dest_dir)
 
     def _contaminated_ids(self, survivors: DataFrame) -> DataFrame:
         """doc_ids among the batch survivors whose distinct hashed
@@ -1125,15 +1358,8 @@ class CorpusWriter:
         `incremental.LeaseHeld` instead of interleaving crash markers;
         a crashed holder's lease is taken over after
         `incremental.LEASE_TTL_S`."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
+        with self._leased():
             return self._admit_locked(batch_doc)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _admit_locked(self, batch_doc: DataFrame) -> dict[str, int]:
         """Run one batch through gates + in-batch dedup + (optional)
@@ -1560,10 +1786,7 @@ class CorpusWriter:
                     # Bootstrap segment 0 = the whole just-written
                     # corpus; no drift stats (there is no pre-admit
                     # reference to measure against).
-                    self._write_drift_hist(self.corpus(), "overwrite")
-                    incremental.record_aligned_snapshot(
-                        self._drift_dir(), stats["snapshot"]
-                    )
+                    self._rebuild_drift(stats["snapshot"])
             return stats
         finally:
             if batch_bands is not None and batch_bands is not cur.bands:
@@ -1814,12 +2037,6 @@ class CorpusWriter:
             batch_doc, cfg, seen_paras=seen, seen_substr=seen_sub
         )
 
-    def _drift_dir(self) -> str:
-        return f"{self.index_dir}/drift_ref"
-
-    def _drift_marker(self) -> str:
-        return f"{self.index_dir}/drift_ref.inprogress"
-
     def _drift_buckets_path(self) -> str:
         return f"{self.index_dir}/drift_ref.buckets.json"
 
@@ -1832,68 +2049,39 @@ class CorpusWriter:
         except (OSError, ValueError, KeyError, TypeError):
             return None
 
-    def _write_drift_hist(self, doc: DataFrame, mode: str) -> None:
-        """Write a layer segment; a REBUILD (mode=overwrite) also pins
-        the bucket count in a sidecar (ADVICE r11: without the pin, a
-        writer constructed with a different ``drift_buckets`` over an
-        existing layer silently mixes hash domains — stored segments
-        mod old B, batch histogram mod new B — and reports wrong KL/TV
-        with no error). Appends inherit the pinned domain: every
-        append in admit is preceded by `_drift_hist_or_heal`, which
-        rebuilds on mismatch first."""
+    def _drift_hist_of(self, doc: DataFrame) -> DataFrame:
+        from .queries.text import corpus_hist
+
+        return corpus_hist(doc.select("text"), self.drift_buckets)
+
+    def _drift_recount(self) -> DataFrame:
+        return self._drift_hist_of(self.corpus())
+
+    def _drift_domain(self) -> int:
+        return self.drift_buckets
+
+    def _drift_domain_pinned(self) -> bool:
+        # Bucket-domain mismatch (or a legacy un-pinned layer): rebuild
+        # from the corpus under THIS writer's B — the existing heal
+        # path; mixing domains would silently corrupt every KL/TV after
+        # it (ADVICE r11).
+        return self._stored_drift_buckets() == self.drift_buckets
+
+    def _pin_drift_domain(self) -> None:
+        """A REBUILD pins the bucket count in a sidecar (ADVICE r11:
+        without the pin, a writer constructed with a different
+        ``drift_buckets`` over an existing layer silently mixes hash
+        domains — stored segments mod old B, batch histogram mod new B
+        — and reports wrong KL/TV with no error). Appends inherit the
+        pinned domain: every append in admit is preceded by
+        `_drift_hist_or_heal`, which rebuilds on mismatch first."""
         import json
         import os
 
-        from .queries.text import corpus_hist
-
-        corpus_hist(doc.select("text"), self.drift_buckets).write.mode(
-            mode
-        ).parquet(self._drift_dir())
-        if mode == "overwrite":
-            tmp = self._drift_buckets_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"buckets": self.drift_buckets}, fh)
-            os.replace(tmp, self._drift_buckets_path())
-
-    def _drift_hist_or_heal(self) -> DataFrame:
-        """The stored reference histogram (per-segment (b, c) rows; the
-        reader sums segments). Self-heals like `_extend_bm25`: an
-        interrupted compact swap forward-rolls, and a missing /
-        uncommitted / marker-bracketed layer (corpus admitted before
-        ``drift_monitor=True``, or a crash inside the derived-layer
-        append window) is rebuilt from the corpus — which at every
-        call site equals exactly the text the layer must describe."""
-        import os
-
-        from . import incremental
-
-        incremental._recover_staged(
-            self.index_dir, ("drift_ref",), discard_stage=False
-        )
-        if (
-            os.path.exists(self._drift_marker())
-            or not _parquet_dir_committed(self._drift_dir())
-            # Bucket-domain mismatch (or a legacy un-pinned layer):
-            # rebuild from the corpus under THIS writer's B — the
-            # existing heal path; mixing domains would silently corrupt
-            # every KL/TV after it (ADVICE r11).
-            or self._stored_drift_buckets() != self.drift_buckets
-        ):
-            self._write_drift_hist(self.corpus(), "overwrite")
-            if os.path.exists(self._drift_marker()):
-                os.remove(self._drift_marker())
-        return self.spark.read.parquet(self._drift_dir())
-
-    def _extend_drift(self, novel: DataFrame) -> None:
-        """Append the admitted batch's histogram segment, bracketed by
-        a marker: a crash mid-append leaves the marker, and the next
-        reader rebuilds the whole layer from the (already-committed)
-        corpus instead of double-counting a half-written segment."""
-        import os
-
-        open(self._drift_marker(), "w").close()
-        self._write_drift_hist(novel, "append")
-        os.remove(self._drift_marker())
+        tmp = self._drift_buckets_path() + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"buckets": self.drift_buckets}, fh)
+        os.replace(tmp, self._drift_buckets_path())
 
     def drift_stats(self, doc: DataFrame, as_of: int | None = None) -> dict:
         """KL/TV of ``doc``'s text distribution vs the stored reference
@@ -1906,50 +2094,7 @@ class CorpusWriter:
         compact()/reconcile() or pruned below the retention horizon
         fail loudly. Returns {"drift_kl_fix", "drift_tv_fix"} (÷
         DSIR_FIX for the float values)."""
-        from . import incremental
-        from .queries.text import corpus_drift_from_hists, corpus_hist
-
-        if not self.drift_monitor:
-            raise ValueError(
-                "this CorpusWriter was constructed without "
-                "drift_monitor=True — there is no stored reference "
-                "histogram to measure against"
-            )
-        if as_of is None:
-            ref = self._drift_hist_or_heal()
-        else:
-            incremental._recover_staged(
-                self.index_dir, ("drift_ref",), discard_stage=False
-            )
-            from .queries.text import DRIFT_HIST_SCHEMA
-
-            ref = incremental.snapshot_read(
-                self.spark, self._drift_dir(), as_of,
-                schema=DRIFT_HIST_SCHEMA,
-            )
-        row = corpus_drift_from_hists(
-            self.spark,
-            ref,
-            corpus_hist(doc.select("text"), self.drift_buckets),
-            self.drift_buckets,
-        ).collect()[0]
-        return {
-            "drift_kl_fix": int(row["kl_fix"]),
-            "drift_tv_fix": int(row["tv_fix"]),
-        }
-
-    def reconcile(self) -> dict:
-        """Public entry: :meth:`_reconcile_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._reconcile_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._measure_drift(doc, as_of)
 
     def _reconcile_locked(self) -> dict:
         """Rebuild the dedup index from the corpus as currently written —
@@ -1965,14 +2110,10 @@ class CorpusWriter:
         from . import incremental
         from .queries.dedup import paragraph_digests
 
-        rebuild_reason = (
-            "layer history collapsed by reconcile (full rebuild from "
-            "the data of record)"
-        )
         meta = incremental.write_index(self.corpus(), self.index_dir)
         self._record_dedup_gens(
             incremental.snapshot_gens(self.corpus_dir),
-            reason=rebuild_reason,
+            reason=_REBUILD_REASON,
         )
         if self.config.dedup_paragraphs:
             paragraph_digests(
@@ -1989,7 +2130,7 @@ class CorpusWriter:
         # (the bm25 contract below).
         self._record_prestage_gens(
             incremental.snapshot_gens(self.corpus_dir),
-            reason=rebuild_reason,
+            reason=_REBUILD_REASON,
         )
         if self.bm25_index:
             from .queries.retrieval import write_bm25_index
@@ -2005,34 +2146,14 @@ class CorpusWriter:
             self._record_bm25_gens(
                 incremental.snapshot_gens(self.corpus_dir),
                 bm_meta,
-                reason=rebuild_reason,
+                reason=_REBUILD_REASON,
             )
         if self.drift_monitor:
             # Also the staleness-heal and late-enablement path.
-            import os
-
-            self._write_drift_hist(self.corpus(), "overwrite")
-            incremental.record_aligned_snapshot(
-                self._drift_dir(),
-                incremental.snapshot_gens(self.corpus_dir),
-                reason=rebuild_reason,
+            self._rebuild_drift(
+                incremental.snapshot_gens(self.corpus_dir), _REBUILD_REASON
             )
-            if os.path.exists(self._drift_marker()):
-                os.remove(self._drift_marker())
         return meta
-
-    def compact(self) -> dict:
-        """Public entry: :meth:`_compact_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._compact_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _compact_locked(self) -> dict:
         """Re-apply the mega-bucket cap across all appends without
@@ -2065,41 +2186,14 @@ class CorpusWriter:
                 ).distinct().repartition(par).write.mode("overwrite").parquet(
                     f"{self.index_dir}/{name}.compact"
                 )
-                # Generation-pinned layer (r14): collapse the manifest
-                # INTO the stage so files + manifest swap together;
-                # older as_of pins then fail loudly (the VERDICT r13
-                # rewrite contract, extended to the pre-stage layers).
-                gens = incremental.snapshot_gens(f"{self.index_dir}/{name}")
-                if gens:
-                    incremental.collapse_snapshots(
-                        f"{self.index_dir}/{name}.compact", gens
-                    )
-                incremental._swap_staged(
-                    self.index_dir, name, fence=self._fence()
-                )
+                self._swap_in_collapsed(name)
         if self.bm25_index:
             from .queries.retrieval import compact_bm25_index
 
             compact_bm25_index(
                 self.spark, self._bm25_dir(), fence=self._fence()
             )
-        if self.drift_monitor and os.path.isdir(self._drift_dir()):
-            # Collapse per-admit segments to ≤ drift_buckets rows —
-            # counts are additive, so the summed rewrite is
-            # content-equivalent under the reader's own SUM (pinned).
-            self.spark.read.parquet(self._drift_dir()).groupBy("b").agg(
-                F.sum("c").cast("long").alias("c")
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{self._drift_dir()}.compact"
-            )
-            gens = incremental.snapshot_gens(self._drift_dir())
-            if gens:
-                incremental.collapse_snapshots(
-                    f"{self._drift_dir()}.compact", gens
-                )
-            incremental._swap_staged(
-                self.index_dir, "drift_ref", fence=self._fence()
-            )
+        self._compact_drift()
         return meta
 
     def release(self) -> None:
@@ -2112,7 +2206,7 @@ class CorpusWriter:
             self._bench_shingles = None
 
 
-class EmbeddingWriter:
+class EmbeddingWriter(_GenerationPinnedWriter):
     """Batch-at-a-time VECTOR admission — :class:`CorpusWriter`'s
     embedding-side twin for a corpus keyed by representation instead of
     text (near-duplicate images/audio under different encodings, captions
@@ -2150,6 +2244,19 @@ class EmbeddingWriter:
     id would store conflicting vectors under one key) — including at
     bootstrap, since stored ids become neighbor ids for every later
     batch."""
+
+    _RECORD = "store"
+    _RECORD_KEY = ("vec_id",)
+    _ID_PREFIX = "ew"
+    _LAYERS = (
+        ("ivf_assignment", ("cell", "vec_id"), ()),
+        ("bucket_sizes", ("table_id", "bucket"), ()),
+        ("pq_codes", ("vec_id",), ()),
+        ("ivfpq_codes", ("cell", "vec_id"), ()),
+        ("lsh_signatures", ("bucket", "vec_id"), ("table_id",)),
+        ("cell_hist", ("b",), ()),
+    )
+    _DRIFT_LAYER = "cell_hist"
 
     def __init__(
         self,
@@ -2235,9 +2342,8 @@ class EmbeddingWriter:
         from .queries.dedup import COSINE_TAU
         from .queries.quantization import PQ_KS, PQ_M
 
-        self.spark = spark
+        super().__init__(spark, index_dir)
         self.store_dir = store_dir
-        self.index_dir = index_dir
         self.tau = COSINE_TAU if tau is None else tau
         self.auto_reconcile = auto_reconcile
         self.train_codebook = train_codebook
@@ -2289,13 +2395,6 @@ class EmbeddingWriter:
         # cached copy still exact.
         self._crows: list | None = None
         self._crows_key: tuple | None = None
-        import os as _os
-        import uuid as _uuid
-
-        self._writer_id = "ew-{}-{}".format(
-            _os.getpid(), _uuid.uuid4().hex[:12]
-        )
-        self._lease_gen = 0  # set by every public mutating entry
 
     def _build_codebook(self):
         """The codebook for an index BUILD: a freshly trained k-means‖
@@ -2349,177 +2448,26 @@ class EmbeddingWriter:
     def _store_exists(self) -> bool:
         return _parquet_dir_committed(self.store_dir)
 
-    def _fence(self) -> tuple[str, str, int]:
-        """`CorpusWriter._fence`'s twin — the ANN writer's fencing
-        token (VERDICT r11 #5)."""
-        return (self.index_dir, self._writer_id, self._lease_gen)
-
     def store(self, as_of: int | None = None) -> DataFrame:
         """The admitted vectors so far (vec_id, label, embedding).
         ``as_of``: a 1-based admission-snapshot generation (the
         ``snapshot`` stats field) — read exactly the files the first
         ``as_of`` recorded admissions committed
         (`incremental.snapshot_files`, zero jobs)."""
-        from . import incremental
-
-        incremental.recover_data_dir(self.store_dir)
-        if as_of is None:
-            return self.spark.read.parquet(self.store_dir)
-        files = incremental.snapshot_files(self.store_dir, as_of)
-        # Same listing-scope discipline as CorpusWriter.corpus (r18).
-        with incremental._local_listing_scope(self.spark, files):
-            return self.spark.read.parquet(*files)
-
-    def snapshots(self) -> int:
-        """Recorded admission-snapshot generations (0 for a store
-        written before snapshots existed) — valid ``as_of`` values are
-        1..this."""
-        from . import incremental
-
-        return incremental.snapshot_gens(self.store_dir)
+        return self._read_record(as_of)
 
     def compact_store(self) -> dict:
         """`CorpusWriter.compact_corpus`'s twin for the vector store:
         per-generation vec_id-sorted rewrite + manifest rewrite —
         ``store(as_of=g)`` bit-equal before/after for every g; staged
         swap, healed at every read; under the writer lease."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.compact_data_snapshots(
-                self.spark,
-                self.store_dir,
-                ("vec_id",),
-                fence=self._fence(),
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def prune_snapshots(self, before_gen: int) -> dict:
-        """`CorpusWriter.prune_snapshots`'s twin for the vector-store
-        family: the store's data-of-record manifest and every stored
-        ANN layer's manifest collapse generations ``< before_gen``
-        together (lockstep numbering survives; layers lagging the
-        horizon are skipped and heal at the next admit). Driver-side
-        only, idempotent, under the writer lease."""
-        import os
-
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._prune_snapshots_locked(before_gen)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _prune_snapshots_locked(self, before_gen: int) -> dict:
-        import os
-
-        from . import incremental
-
-        incremental.verify_lease(*self._fence())
-        incremental.recover_data_dir(self.store_dir, locked=True)
-        out = {
-            "store": incremental.prune_snapshots(
-                self.store_dir, before_gen
-            )
-        }
-        for name in (
-            "lsh_signatures",
-            "ivf_assignment",
-            "bucket_sizes",
-            "pq_codes",
-            "ivfpq_codes",
-            "cell_hist",
-        ):
-            d = f"{self.index_dir}/{name}"
-            if (
-                os.path.isdir(d)
-                and incremental.snapshot_gens(d) >= before_gen
-            ):
-                out[name] = incremental.prune_snapshots(d, before_gen)
-        return out
-
-    def vacuum(self, before_gen: int) -> dict:
-        """`CorpusWriter.vacuum`'s twin for the vector store: prune the
-        family to ``before_gen`` (idempotent), then physically rewrite
-        each layer's merged base generation into query-key-sorted
-        target-sized files, dropping the superseded pre-horizon small
-        files at the staged swap — ``store(as_of >= before_gen)`` and
-        every from-index ``as_of >= before_gen`` read bit-equal
-        before/after, older pins loudly refused, crash self-heals.
-        Covers the store plus every derived layer, each sorted by its
-        query key (the compaction clustering discipline — inverted
-        file by cell, occupancy by (table, bucket), codes by their
-        scan key); the hive-partitioned ``lsh_signatures`` rewrite
-        re-emits its ``table_id=`` dirs (``partition_by`` — the
-        manifest keeps partition-dir-relative names, so ``basePath``
-        as-of readers still recover the column). No layer here has
-        tombstone-masked rows, so every vacuum is consolidation-only
-        (``dead=None``)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            out: dict = self._prune_snapshots_locked(before_gen)
-            out["store"] = incremental.vacuum_data_snapshots(
-                self.spark,
-                self.store_dir,
-                before_gen,
-                ("vec_id",),
-                fence=self._fence(),
-            )
-            import os
-
-            for name, order, parts in (
-                ("ivf_assignment", ("cell", "vec_id"), ()),
-                ("bucket_sizes", ("table_id", "bucket"), ()),
-                ("pq_codes", ("vec_id",), ()),
-                ("ivfpq_codes", ("cell", "vec_id"), ()),
-                ("lsh_signatures", ("bucket", "vec_id"), ("table_id",)),
-                # Drift layer (ADVICE r15): per-admit (b, c) segments —
-                # mirrors CorpusWriter.vacuum's drift_ref entry.
-                ("cell_hist", ("b",), ()),
-            ):
-                d = f"{self.index_dir}/{name}"
-                if (
-                    os.path.isdir(d)
-                    and incremental.snapshot_gens(d) >= before_gen
-                ):
-                    out[name] = incremental.vacuum_data_snapshots(
-                        self.spark,
-                        d,
-                        before_gen,
-                        order,
-                        fence=self._fence(),
-                        partition_by=parts,
-                    )
-            return out
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._compact_record()
 
     def export_store(self, as_of: int, dest_dir: str) -> dict:
         """Publish the vector store as of generation ``as_of`` as a
         standalone dir (`incremental.export_snapshot`), under the
         writer lease — `CorpusWriter.export_corpus`'s twin."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.export_snapshot(
-                self.store_dir, as_of, dest_dir
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._export_record(as_of, dest_dir)
 
     def _in_batch_rejects(
         self, batch_emb: DataFrame, sig: DataFrame, cap: int, b: int
@@ -2560,15 +2508,8 @@ class EmbeddingWriter:
         single-writer lease — `CorpusWriter.admit`'s contract: a
         second concurrent writer raises `incremental.LeaseHeld`; a
         crashed holder is taken over after `incremental.LEASE_TTL_S`."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
+        with self._leased():
             return self._admit_locked(batch_emb)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _admit_locked(self, batch_emb: DataFrame) -> dict[str, int]:
         """Run one (vec_id, label, embedding) batch through in-batch
@@ -2644,12 +2585,7 @@ class EmbeddingWriter:
                 # Bootstrap segment 0 = the just-built inverted file's
                 # occupancy; no drift stats (no pre-admit reference).
                 self._ensure_crows(_read_ann_meta(self.index_dir))
-                self._write_cell_hist(
-                    self._stored_cell_source(), "overwrite"
-                )
-                incremental.record_aligned_snapshot(
-                    self._cell_hist_dir(), stats["snapshot"]
-                )
+                self._rebuild_drift(stats["snapshot"])
             return stats
 
         meta = _read_ann_meta(self.index_dir)
@@ -2764,8 +2700,8 @@ class EmbeddingWriter:
                 self._ensure_crows(meta)
                 drow = corpus_drift_from_hists(
                     self.spark,
-                    self._cell_hist_or_heal(),
-                    self._cell_hist_of(batch_emb),
+                    self._drift_hist_or_heal(),
+                    self._drift_hist_of(batch_emb),
                     len(self._crows),
                 ).collect()[0]
                 stats["drift_kl_fix"] = int(drow["kl_fix"])
@@ -2836,9 +2772,9 @@ class EmbeddingWriter:
                 # contract as the text writer's drift_ref — and the
                 # same generation pin (r14): drift_refuse makes this
                 # layer admission-affecting state.
-                self._extend_cell_hist(novel)
+                self._extend_drift(novel)
                 incremental.record_aligned_snapshot(
-                    self._cell_hist_dir(), stats["snapshot"]
+                    self._drift_dir(), stats["snapshot"]
                 )
             if drift_hit and self.drift_reconcile:
                 # The retrain trigger (VERDICT r11 #8 stretch): the
@@ -2858,12 +2794,6 @@ class EmbeddingWriter:
                 if ck is not None:
                     release_local_checkpoint(ck)
 
-    def _cell_hist_dir(self) -> str:
-        return f"{self.index_dir}/cell_hist"
-
-    def _cell_hist_marker(self) -> str:
-        return f"{self.index_dir}/cell_hist.inprogress"
-
     def _cell_map(self) -> DataFrame:
         """(cell, b): the frozen codebook's cells mapped to the dense
         [0, n_cells) bucket domain `corpus_drift_from_hists` ranges
@@ -2873,7 +2803,7 @@ class EmbeddingWriter:
             [(c, i) for i, c in enumerate(cells)], "cell long, b long"
         )
 
-    def _cell_hist_of(self, emb: DataFrame) -> DataFrame:
+    def _drift_hist_of(self, emb: DataFrame) -> DataFrame:
         """(b, c): the IVF-cell histogram of ``emb``'s vectors under
         the FROZEN stored codebook — the vector-side analogue of the
         text writer's hashed-unigram histogram (the embedding
@@ -2890,7 +2820,7 @@ class EmbeddingWriter:
             .agg(F.count("*").cast("long").alias("c"))
         )
 
-    def _stored_cell_source(self) -> DataFrame:
+    def _drift_recount(self) -> DataFrame:
         """The inverted file's rk == 1 rows mapped to the dense domain —
         the recount source the layer must always sum to (pinned)."""
         return (
@@ -2901,36 +2831,15 @@ class EmbeddingWriter:
             .agg(F.count("*").cast("long").alias("c"))
         )
 
-    def _write_cell_hist(self, hist: DataFrame, mode: str) -> None:
-        hist.write.mode(mode).parquet(self._cell_hist_dir())
+    def _drift_domain(self) -> int:
+        return len(self._crows)
 
-    def _cell_hist_or_heal(self) -> DataFrame:
-        """Stored per-segment (b, c) layer; heals exactly like the text
-        writer's drift_ref — interrupted compact swaps forward-roll, a
-        missing/uncommitted/marker-bracketed layer rebuilds from the
-        stored inverted file (which at every call site is the pre-admit
-        corpus — the extend runs later)."""
-        import os
-
-        from . import incremental
-
-        incremental._recover_staged(
-            self.index_dir, ("cell_hist",), discard_stage=False
-        )
-        if os.path.exists(
-            self._cell_hist_marker()
-        ) or not _parquet_dir_committed(self._cell_hist_dir()):
-            self._write_cell_hist(self._stored_cell_source(), "overwrite")
-            if os.path.exists(self._cell_hist_marker()):
-                os.remove(self._cell_hist_marker())
-        return self.spark.read.parquet(self._cell_hist_dir())
-
-    def _extend_cell_hist(self, novel: DataFrame) -> None:
-        import os
-
-        open(self._cell_hist_marker(), "w").close()
-        self._write_cell_hist(self._cell_hist_of(novel), "append")
-        os.remove(self._cell_hist_marker())
+    # The shared drift-histogram layer under its embedding-side names.
+    _cell_hist_dir = _GenerationPinnedWriter._drift_dir
+    _cell_hist_marker = _GenerationPinnedWriter._drift_marker
+    _cell_hist_or_heal = _GenerationPinnedWriter._drift_hist_or_heal
+    _cell_hist_of = _drift_hist_of
+    _stored_cell_source = _drift_recount
 
     def drift_stats(self, emb: DataFrame, as_of: int | None = None) -> dict:
         """KL/TV of ``emb``'s IVF-cell distribution (under the FROZEN
@@ -2941,39 +2850,13 @@ class EmbeddingWriter:
         codebook's cell domain, because a reconcile retrain collapses
         the layer's history along with the domain. Returns
         {"drift_kl_fix", "drift_tv_fix"}."""
-        from . import incremental
         from .queries.similarity import _read_ann_meta
-        from .queries.text import corpus_drift_from_hists
 
-        if not self.drift_monitor:
-            raise ValueError(
-                "this EmbeddingWriter was constructed without "
-                "drift_monitor=True — there is no stored occupancy "
-                "layer to measure against"
-            )
-        self._ensure_crows(_read_ann_meta(self.index_dir))
-        if as_of is None:
-            ref = self._cell_hist_or_heal()
-        else:
-            incremental._recover_staged(
-                self.index_dir, ("cell_hist",), discard_stage=False
-            )
-            from .queries.text import DRIFT_HIST_SCHEMA
-
-            ref = incremental.snapshot_read(
-                self.spark, self._cell_hist_dir(), as_of,
-                schema=DRIFT_HIST_SCHEMA,
-            )
-        row = corpus_drift_from_hists(
-            self.spark,
-            ref,
-            self._cell_hist_of(emb.select("vec_id", "embedding")),
-            len(self._crows),
-        ).collect()[0]
-        return {
-            "drift_kl_fix": int(row["kl_fix"]),
-            "drift_tv_fix": int(row["tv_fix"]),
-        }
+        if self.drift_monitor:
+            # The heal rebuild and the batch histogram both map cells
+            # through the frozen codebook.
+            self._ensure_crows(_read_ann_meta(self.index_dir))
+        return self._measure_drift(emb, as_of)
 
     def _ensure_crows(self, meta: dict) -> None:
         crows_key = (meta["n"], meta["b"])
@@ -3148,19 +3031,6 @@ class EmbeddingWriter:
             stacklevel=3,
         )
 
-    def reconcile(self) -> dict:
-        """Public entry: :meth:`_reconcile_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._reconcile_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
     def _reconcile_locked(self) -> dict:
         """Rebuild the ANN index from the store as currently written —
         the recovery path for a crash inside :meth:`admit`'s
@@ -3197,10 +3067,7 @@ class EmbeddingWriter:
 
         self._record_ann_gens(
             incremental.snapshot_gens(self.store_dir),
-            reason=(
-                "layer history collapsed by reconcile (full rebuild "
-                "from the data of record)"
-            ),
+            reason=_REBUILD_REASON,
         )
         if self.drift_monitor:
             # A rebuild retrains the codebook — the cell DOMAIN itself
@@ -3208,34 +3075,11 @@ class EmbeddingWriter:
             # inverted file (also the staleness-heal / late-enablement
             # path). History collapses WITH the domain: any servable
             # as_of is always within one codebook's cell domain.
-            import os
-
             self._ensure_crows(meta)
-            self._write_cell_hist(self._stored_cell_source(), "overwrite")
-            incremental.record_aligned_snapshot(
-                self._cell_hist_dir(),
-                incremental.snapshot_gens(self.store_dir),
-                reason=(
-                    "layer history collapsed by reconcile (full "
-                    "rebuild from the data of record)"
-                ),
+            self._rebuild_drift(
+                incremental.snapshot_gens(self.store_dir), _REBUILD_REASON
             )
-            if os.path.exists(self._cell_hist_marker()):
-                os.remove(self._cell_hist_marker())
         return meta
-
-    def compact(self) -> dict:
-        """Public entry: :meth:`_compact_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._compact_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _compact_locked(self) -> dict:
         """Collapse the ANN index's per-admit append segments
@@ -3263,26 +3107,7 @@ class EmbeddingWriter:
                 qz.compact_pq_codes(
                     self.spark, self.index_dir, fence=self._fence()
                 )
-        import os
-
-        if self.drift_monitor and os.path.isdir(self._cell_hist_dir()):
-            from . import incremental
-
-            self.spark.read.parquet(self._cell_hist_dir()).groupBy(
-                "b"
-            ).agg(F.sum("c").cast("long").alias("c")).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                f"{self._cell_hist_dir()}.compact"
-            )
-            gens = incremental.snapshot_gens(self._cell_hist_dir())
-            if gens:
-                incremental.collapse_snapshots(
-                    f"{self._cell_hist_dir()}.compact", gens
-                )
-            incremental._swap_staged(
-                self.index_dir, "cell_hist", fence=self._fence()
-            )
+        self._compact_drift()
         return meta
 
 

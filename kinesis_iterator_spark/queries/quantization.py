@@ -1001,14 +1001,6 @@ def _rank_cells(crows: list, query: list[float], nprobe: int) -> list[int]:
     return [cell for _, cell in ranked[:nprobe]]
 
 
-def _probe_cells(index_dir: str, query: list[float], nprobe: int) -> list[int]:
-    """`_rank_cells` over the stored ``centroids/`` sidecar (pyarrow
-    read, zero jobs)."""
-    from .similarity import read_ann_codebook
-
-    return _rank_cells(read_ann_codebook(index_dir), query, nprobe)
-
-
 def pq_ivf_topk_from_index(
     spark: SparkSession,
     index_dir: str,

@@ -513,6 +513,15 @@ def extend_bm25_index(
     NOT already in the index — the admission layer's exact-dedup
     guarantees it; a re-extended id would double-count its postings.
 
+    Precondition (single writer): the caller is the only writer of
+    ``index_dir`` for the whole call — in the writer family, the
+    holder of the writer lease (`CorpusWriter`'s ``_leased()``). The
+    batch totals (``n_docs``/``t_tokens``) are read from the doclen
+    files that appear between a before and an after listing of the
+    layer; a concurrent direct caller's files would land in that diff
+    and be counted as this batch's, leaving wrong scoring totals.
+    This function does not take or check the lease itself.
+
     ``postings`` (r18): precomputed ``_postings_frame`` rows of EXACTLY
     ``new_doc``'s documents, with a MATERIALIZED-or-cheap lineage (the
     three appends consume it once each — a caller building several

@@ -1288,12 +1288,15 @@ def extend_ann_index(
     # the bm25 extend-totals pattern) instead of one more Spark
     # groupBy+write job chain per admit. Identical rows by
     # construction: the written files ARE sig_rows. The driver path is
-    # attempted only when the caller declared the batch size (the
-    # writer path, whose ``sig`` is checkpoint-backed and cheap to
-    # re-consume on the rare over-gate fallback); with n_new unknown
-    # the distributed aggregate keeps its place INSIDE the concurrent
-    # group — serializing it after the appends would add its full wall
-    # time to exactly the large extends where it is longest.
+    # attempted whenever the caller declared the batch size (``n_new``),
+    # with or without a caller ``sig``. On the rare over-gate fallback
+    # the distributed aggregate re-consumes ``sig``: cheap for the
+    # writer path (its ``sig`` is checkpoint-backed), but with
+    # ``sig is None`` it re-runs the LSH kernel over ``new_emb``. With
+    # n_new unknown the distributed aggregate keeps its place INSIDE
+    # the concurrent group — serializing it after the appends would add
+    # its full wall time to exactly the large extends where it is
+    # longest.
     try_driver_bsz = has_bsz and n_new is not None
     if has_bsz:
         # Single-writer contract: any `_stage-` file present at entry

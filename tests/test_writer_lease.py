@@ -4,8 +4,10 @@ second concurrent writer fail LOUDLY (`incremental.LeaseHeld`) instead
 of interleaving crash markers, with stale-lease takeover for crashed
 holders. Pins: refusal while held, same-writer reentry/heartbeat,
 takeover after TTL, release-on-exit (success AND failure), idempotent
-release, unreadable-lease takeover, and the refusal surfacing through
-`CorpusWriter.admit` / `EmbeddingWriter.admit`."""
+release, unreadable-lease takeover, the refusal surfacing through every
+leased public entry of `CorpusWriter` / `EmbeddingWriter` (state
+untouched), and a nested `_leased()` raising instead of dropping the
+outer lease."""
 
 from __future__ import annotations
 
@@ -236,6 +238,50 @@ def test_embedding_writer_fenced_admit_fails_before_append(
     assert _dir_rows(w.store_dir) == before
 
 
+def _dir_state(*dirs):
+    """Every file under ``dirs`` except the lease files, with its size
+    and mtime — and, for a `_snapshots.jsonl` manifest, its content."""
+    state = {}
+    for d in dirs:
+        for root, _, files in os.walk(d):
+            for f in files:
+                if f.startswith("writer.lease"):
+                    continue
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                state[p] = (st.st_size, st.st_mtime_ns)
+                if f == incremental.SNAPSHOT_NAME:
+                    with open(p) as fh:
+                        state[p] += (fh.read(),)
+    return state
+
+
+def _assert_leased_entries_refuse(w, data_dir, entries, export):
+    """Under a foreign lease every one of ``entries`` raises LeaseHeld
+    and leaves the data of record, the index and their manifests
+    exactly as they were (and exports nothing to ``export``)."""
+    before = _dir_state(data_dir, w.index_dir)
+    assert any(p.endswith(incremental.SNAPSHOT_NAME) for p in before)
+    acquire_lease(w.index_dir, "intruder")
+    for name, call in entries:
+        with pytest.raises(LeaseHeld):
+            call()
+        assert _dir_state(data_dir, w.index_dir) == before, name
+    assert not os.path.exists(export)
+    release_lease(w.index_dir, "intruder")
+
+
+def _assert_nested_leased_raises(w):
+    with w._leased():
+        with pytest.raises(RuntimeError, match="nested"):
+            with w._leased():
+                pass
+        # the refused inner entry left the outer lease in place
+        with open(_lease_path(w.index_dir)) as f:
+            assert json.load(f)["writer_id"] == w._writer_id
+    assert not os.path.exists(_lease_path(w.index_dir))
+
+
 def test_corpus_writer_admit_refuses_under_foreign_lease(
     spark, sf_dir, tmp_path
 ):
@@ -258,12 +304,23 @@ def test_corpus_writer_admit_refuses_under_foreign_lease(
     # the lease is released between calls (a second WRITER may take
     # over serially; only CONCURRENT admits are the corruption class)
     assert not os.path.exists(_lease_path(w.index_dir))
-    acquire_lease(w.index_dir, "intruder")
-    with pytest.raises(LeaseHeld):
-        w.compact()
-    with pytest.raises(LeaseHeld):
-        w.reconcile()
-    release_lease(w.index_dir, "intruder")
+    # Every other leased public entry refuses too, touching nothing.
+    export = str(tmp_path / "export")
+    _assert_leased_entries_refuse(
+        w,
+        w.corpus_dir,
+        [
+            ("admit", lambda: w.admit(b1)),
+            ("compact", w.compact),
+            ("reconcile", w.reconcile),
+            ("compact_corpus", w.compact_corpus),
+            ("prune_snapshots", lambda: w.prune_snapshots(1)),
+            ("vacuum", lambda: w.vacuum(1)),
+            ("export_corpus", lambda: w.export_corpus(1, export)),
+        ],
+        export,
+    )
+    _assert_nested_leased_raises(w)
 
 
 def test_embedding_writer_admit_refuses_under_foreign_lease(
@@ -282,6 +339,22 @@ def test_embedding_writer_admit_refuses_under_foreign_lease(
     s = w.admit(emb.filter(F.col("vec_id") % 10 == 0))
     assert s["n_admitted"] > 0
     assert not os.path.exists(_lease_path(w.index_dir))
+    export = str(tmp_path / "export")
+    _assert_leased_entries_refuse(
+        w,
+        w.store_dir,
+        [
+            ("admit", lambda: w.admit(emb.filter(F.col("vec_id") % 10 == 1))),
+            ("compact", w.compact),
+            ("reconcile", w.reconcile),
+            ("compact_store", w.compact_store),
+            ("prune_snapshots", lambda: w.prune_snapshots(1)),
+            ("vacuum", lambda: w.vacuum(1)),
+            ("export_store", lambda: w.export_store(1, export)),
+        ],
+        export,
+    )
+    _assert_nested_leased_raises(w)
 
 
 def test_admit_failure_still_releases(spark, sf_dir, tmp_path):
